@@ -77,10 +77,14 @@ SHOWCASE = {
         "exchange."
     ),
     "sim_cosine_ann_ivf": (
-        "IVF approximate nearest neighbor: codebook and query vector join "
-        "as broadcasts (the corpus scan stays embarrassingly parallel), "
-        "cell assignment is a per-vector argmin window, final top-10 via "
-        "TakeOrderedAndProject."
+        "IVF approximate nearest neighbor (r12 Arrow kernel): the probe "
+        "cells are decided on the driver from the bounded 8-row codebook "
+        "and 1-row query collects; ONE MapInPandas pass over the corpus "
+        "scan, with both in the task closure, assigns each vector's cell "
+        "and scores it against the query. The only shuffle is the "
+        "map-side-combined max_by that pools duplicate vec_ids (4 scalars "
+        "per row, no vector payload) — no crossjoin, window or probe "
+        "join. Probe filter, then top-10 via TakeOrderedAndProject."
     ),
     "dedup_near_embedding": (
         "Banded-LSH embedding dedup (r3 rewire): Arrow-batched bucket "

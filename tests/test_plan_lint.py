@@ -75,10 +75,6 @@ WHITELIST = {
         "|event types|^3 contexts"
     ),
     "beh_session_paths": "rank<=15 -> WindowGroupLimit pre-trims each task",
-    # --- broadcast-sized ANN codebooks ---
-    "sim_cosine_ann_ivf": "centroid ranking: |codebook| rows (k=16)",
-    "sim_cosine_ann_ivfpq": "coarse-centroid probe ranking: 8 rows",
-    "sim_ivf_recall_audit": "centroid rankings: |codebook| rows (k=16)",
 }
 
 

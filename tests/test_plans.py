@@ -198,10 +198,17 @@ def test_q21_single_fact_scan(spark):
 
 
 def test_ivf_broadcasts_codebook_and_takeordered(spark):
-    """IVF ANN: codebook/query join as broadcasts (corpus scan stays
-    parallel); final top-10 via TakeOrderedAndProject."""
+    """IVF ANN: the 8-row codebook and the query ship in the task
+    closure of ONE Arrow map pass over the corpus scan (cell assignment
+    and query scoring per vector, no per-row join); the probe cells are
+    decided on the driver, so the only shuffle is the map-side-combined
+    max_by that pools duplicate vec_ids — no crossjoin, no window, no
+    probe join. Final top-10 via TakeOrderedAndProject."""
     df = QUERIES["sim_cosine_ann_ivf"](spark, SF_DIR)
-    assert_in_plan(df, "BroadcastHashJoin", at_least=1)
+    assert count_occurrences(df, "MapInPandas") == 1
+    assert count_occurrences(df, "Exchange") == 1
+    assert_not_in_plan(df, "BroadcastNestedLoopJoin")
+    assert_not_in_plan(df, "Window")
     assert_in_plan(df, "TakeOrderedAndProject")
     assert_not_in_plan(df, "CartesianProduct")
 
