@@ -57,6 +57,13 @@ def get_session(
         # to every parquet sink the engine writes; readers (Spark,
         # DuckDB oracle) decode zstd natively.
         .config("spark.sql.parquet.compression.codec", "zstd")
+        # Compiled-class cache for whole-stage and expression codegen
+        # (static; Spark's default keeps 100 classes). One session runs
+        # the whole registry, so the default thrashes and every repeat
+        # of a query shape pays its Janino compile again. Measured on
+        # a 4-core VM, 160 oracled queries at sf0.01 run a second time
+        # in the same session: 85 s at the default, 45 s at 4000.
+        .config("spark.sql.codegen.cache.maxEntries", "4000")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))

@@ -365,8 +365,11 @@ def _write_data_files(
                     )
                 ).alias(f"bp_{s}")
             )
+    # read back with the schema just written: skips the footer-inference
+    # job a bare spark.read.parquet runs on every commit
     stats = (
-        spark.read.parquet(full)
+        spark.read.schema(df.schema)
+        .parquet(full)
         .groupBy(F.input_file_name().alias("f"))
         .agg(*aggs)
         .collect()

@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 
 from apache_spark_irs_form_990_spark.functions.vectors import nonzero_milli
 from apache_spark_irs_form_990_spark.registry import register
-from apache_spark_irs_form_990_spark.tables import load
+from apache_spark_irs_form_990_spark.tables import load, read_parquet_file
 
 _COUNTER = itertools.count()
 
@@ -61,7 +61,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The file stream needs a declared schema; mirror whatever the current
     # generator wrote (nanos-as-long vs micros TIMESTAMP_NTZ) and normalize
     # ts to a session-TZ timestamp exactly like the batch loader (tables.py).
-    raw_schema = spark.read.parquet(src).schema
+    raw_schema = read_parquet_file(spark, src).schema
     raw = spark.readStream.schema(raw_schema).format("parquet").load(stage)
     ts_type = raw_schema["ts"].dataType.simpleString()
     if ts_type == "bigint":

@@ -5,9 +5,20 @@ One parquet file per table under ``{sf_dir}/``. All reads go through
 pruning for free; callers select/filter on the returned DataFrame and
 the scan narrows automatically (verify with ``.explain`` —
 ``PushedFilters``/``ReadSchema``).
+
+Schema inference on ``spark.read.parquet`` runs a Spark job that reads
+the file footer (about 0.1 s on a local session), and every query
+loads several tables. ``load`` therefore remembers each file's inferred
+schema, keyed by path, size and mtime, and hands it back through
+``spark.read.schema`` on later reads: the same schema inference would
+return, minus the job. Every call still builds a fresh relation, so
+self-joins keep distinct attribute ids.
 """
 
 from __future__ import annotations
+
+import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -26,6 +37,34 @@ TABLES = (
     "embeddings",
 )
 
+_SCHEMAS: dict[tuple, T.StructType] = {}
+_SCHEMAS_LOCK = threading.Lock()
+
+
+def read_parquet_file(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the inferred schema memoized for
+    a single regular file (directories and missing paths read as-is)."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path)
+    if not os.path.isfile(path):
+        return spark.read.parquet(path)
+    key = (
+        os.path.abspath(path),
+        st.st_size,
+        st.st_mtime_ns,
+        spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false"),
+    )
+    with _SCHEMAS_LOCK:
+        schema = _SCHEMAS.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    with _SCHEMAS_LOCK:
+        _SCHEMAS[key] = df.schema
+    return df
+
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
@@ -36,7 +75,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # (Spark's native timestamp precision — same truncation DuckDB
         # applies on CAST(ts AS TIMESTAMP)). Runtime-settable legacy conf.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        df = read_parquet_file(spark, f"{sf_dir}/{name}.parquet")
         if isinstance(df.schema["ts"].dataType, T.LongType):
             # integer `div`, not `/1000` + cast: double division can round
             # up across a microsecond boundary and diverge from DuckDB's
@@ -49,7 +88,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # instant without shifting values, matching DuckDB's naive reads.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_parquet_file(spark, f"{sf_dir}/{name}.parquet")
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -30,6 +30,27 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def smoke_frames(spark):
+    """Every registered query built once at the smoke scale factor, as
+    ``{name: DataFrame}`` in name order; a query whose build raised maps
+    to that exception. The registry-wide plan lints (test_plan_lint,
+    test_bucket_join_lint) each walk every query's optimized plan, and
+    many queries do eager work when built (table writes, checkpoints,
+    streams), so the registry is built once for both lints."""
+    from apache_spark_irs_form_990_spark import registry
+
+    frames: dict = {}
+    for name, fn in sorted(registry.queries().items()):
+        try:
+            df = fn(spark, SMOKE_SF_DIR)
+            df._jdf.queryExecution().optimizedPlan()
+            frames[name] = df
+        except Exception as e:  # noqa: BLE001 — each lint reports it
+            frames[name] = e
+    return frames
+
+
+@pytest.fixture(scope="session")
 def duck():
     con = duckdb.connect()
     for t in TABLES:

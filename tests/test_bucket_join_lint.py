@@ -33,7 +33,6 @@ from apache_spark_irs_form_990_spark import registry
 from apache_spark_irs_form_990_spark.plans.inspect import (
     unguarded_bucket_joins,
 )
-from tests.conftest import SMOKE_SF_DIR
 
 # query id -> why its guardless bucket-keyed join is bounded anyway
 WHITELIST = {
@@ -81,16 +80,18 @@ def test_whitelist_entries_exist():
     assert not stale, f"whitelist names not in registry: {stale}"
 
 
-def test_no_unguarded_bucket_join(spark):
+def test_no_unguarded_bucket_join(smoke_frames):
     """Walk every registered query's optimized plan; fail on any
     bucket-keyed join lacking an occupancy guard outside the
     documented whitelist — and on whitelist entries whose queries no
     longer plan such a join."""
     violations = {}
     unused_whitelist = set(WHITELIST)
-    for name, fn in sorted(registry.queries().items()):
+    for name, df in smoke_frames.items():
         try:
-            hits = unguarded_bucket_joins(fn(spark, SMOKE_SF_DIR))
+            if isinstance(df, Exception):
+                raise df
+            hits = unguarded_bucket_joins(df)
         except Exception as e:  # noqa: BLE001 — build errors are other tests' job
             pytest.fail(f"{name}: query build failed in lint: {e}")
         if not hits:

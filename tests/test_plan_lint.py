@@ -31,7 +31,6 @@ from apache_spark_irs_form_990_spark import registry
 from apache_spark_irs_form_990_spark.plans.inspect import (
     unpartitioned_windows,
 )
-from tests.conftest import SMOKE_SF_DIR
 
 # query id -> why its empty-partition window frame is bounded
 WHITELIST = {
@@ -84,14 +83,16 @@ def test_whitelist_entries_exist():
     assert not stale, f"whitelist names not in registry: {stale}"
 
 
-def test_no_unpartitioned_window_over_unbounded_input(spark):
+def test_no_unpartitioned_window_over_unbounded_input(smoke_frames):
     """Walk every registered query's optimized plan; fail on any
     empty-partition Window outside the documented whitelist."""
     violations = {}
     unused_whitelist = set(WHITELIST)
-    for name, fn in sorted(registry.queries().items()):
+    for name, df in smoke_frames.items():
         try:
-            hits = unpartitioned_windows(fn(spark, SMOKE_SF_DIR))
+            if isinstance(df, Exception):
+                raise df
+            hits = unpartitioned_windows(df)
         except Exception as e:  # noqa: BLE001 — build errors are other tests' job
             pytest.fail(f"{name}: query build failed in lint: {e}")
         if not hits:
