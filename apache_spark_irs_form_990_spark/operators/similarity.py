@@ -2741,20 +2741,6 @@ def _codebook_arrays(codebook: DataFrame) -> dict:
     return out
 
 
-def _pq_sub_sse():
-    """Exact int64 SSE of a vector's s-th sub-slice against centroid
-    ``c`` — the assignment metric shared by every PQ query (Catalyst
-    form, kept for the one-off scalar uses; batch assignment goes
-    through `_pq_assign`'s Arrow kernel)."""
-    D = _PQ_DIMS
-    sub = F.slice(F.col("v"), F.col("s") * D + 1, D)
-    return F.aggregate(
-        F.zip_with(sub, F.col("c"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-
-
 def _pq_assign(mm: DataFrame, codebook: DataFrame) -> DataFrame:
     """(vec_id, s, cid, sse): nearest centroid per sub-space, exact
     integer argmin with (sse, cid) tie-break.

@@ -12,7 +12,8 @@ the real thing:
 
   table_dir/
     _commits/00000000.json ...   the COMMIT LOG: one JSON per version,
-                                 {added: {...}, removed: [...], stats}
+                                 {added: {relpath: stats}, removed:
+                                 [...], metrics}
     d-<uuid>/part-*.parquet      immutable data subdirs, one per commit
 
 Snapshot isolation falls out of three properties:
@@ -59,6 +60,15 @@ partition merge provably reads only that partition's files
 At 100 TB this is the difference between a nightly MERGE costing
 O(changed partitions) and O(table).
 
+A commit re-reads nothing it just wrote: the per-file stats come from
+the parquet footers of the staged files (a second scan runs only for
+bloom sidecars, whose bit positions need the data), and its
+``metrics`` (rows, bytes and files added, files removed, duration,
+attempts) come from the same footers and file sizes. Every read of
+the table's own files is pinned to the schema the log records as of
+the version read (`_scan`), so no read infers a schema from a footer,
+and deletion-vector dirs are read with one constant schema.
+
 Compaction is a commit whose added files hold exactly the removed
 files' rows — `compact_table` rewrites the live set to the 128 MB
 planner's file count without changing a row, and since r11 retries
@@ -84,6 +94,7 @@ import json
 import os
 import shutil
 import struct
+import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -184,6 +195,45 @@ def snapshot_dv(path: str, version: int | None = None) -> dict:
     return dv
 
 
+# the one schema every deletion-vector dir is written and read with
+_DV_SCHEMA = "rel string, pos long"
+
+
+def _scan(
+    spark: SparkSession, path: str, rels, schema: StructType
+) -> DataFrame:
+    """The one read path for the table's own data files: a parquet scan
+    pinned to ``schema``, the schema the commit log records as of the
+    version being read (Spark SQL's user-given data-source schema).
+    Nothing is inferred, so the scan launches no footer job; columns
+    come back in the logged order whatever order a file stores them
+    in, and a column a file predates (an evolved table) reads as typed
+    NULL."""
+    return spark.read.schema(schema).parquet(
+        *[os.path.join(path, rel) for rel in rels]
+    )
+
+
+def _metrics(
+    path: str, added: dict, removed, t0: float, attempts: int
+) -> dict:
+    """What a commit did, from what the writer already holds: the
+    manifest rows of its added files, their sizes on disk, the
+    removed-file count, the wall time since the call began (``t0``,
+    `time.monotonic`) and how many version claims it took. No Spark
+    job."""
+    return {
+        "rows_added": sum(s["rows"] for s in added.values()),
+        "bytes_added": sum(
+            os.path.getsize(os.path.join(path, rel)) for rel in added
+        ),
+        "files_added": len(added),
+        "files_removed": len(removed),
+        "duration_s": round(time.monotonic() - t0, 4),
+        "attempts": attempts,
+    }
+
+
 def _rel_expr():
     """`_metadata.file_path` → the manifest's relpath (subdir/file) —
     the join key between scanned rows and DV positions."""
@@ -216,7 +266,7 @@ def _apply_dv(
         F.col("_metadata.row_index").alias("_dv_pos"),
     )
     if dv_dirs:
-        pos = spark.read.parquet(
+        pos = spark.read.schema(_DV_SCHEMA).parquet(
             *[os.path.join(path, d) for d in sorted(dv_dirs)]
         ).select(
             F.col("rel").alias("_dv_rel"), F.col("pos").alias("_dv_pos")
@@ -316,44 +366,61 @@ def _pack_bits(positions, m: int) -> bytes:
     return struct.pack(f"<{len(words)}Q", *words)
 
 
-def _write_data_files(
+def _footer_stats(full: str, cols: list[str]) -> list | None:
+    """Per-file ``(name, rows, lo, hi)`` for every non-empty parquet
+    file under ``full``, read from the footers the write just produced:
+    ``rows`` is the footer's row count, ``lo``/``hi`` the min and max of
+    each column of ``cols`` over the row groups' statistics (the stats
+    Shark collects while it loads, instead of in a second scan).
+    Returns None when some footer lacks min/max for a needed column
+    (an all-NULL row group, or a value past the writer's statistics
+    size cut-off) — the caller then falls back to the aggregate."""
+    import pyarrow.parquet as pq
+
+    out = []
+    for name in sorted(os.listdir(full)):
+        if not name.endswith(".parquet") or name.startswith((".", "_")):
+            continue
+        md = pq.read_metadata(os.path.join(full, name))
+        if md.num_rows == 0:
+            continue
+        leaf = {md.schema.column(i).path: i for i in range(md.num_columns)}
+        lo, hi = [], []
+        for c in cols:
+            if c not in leaf:
+                return None
+            mins, maxs = [], []
+            for g in range(md.num_row_groups):
+                st = md.row_group(g).column(leaf[c]).statistics
+                if st is None or not st.has_min_max:
+                    return None
+                mins.append(st.min)
+                maxs.append(st.max)
+            lo.append(min(mins))
+            hi.append(max(maxs))
+        out.append((name, md.num_rows, lo, hi))
+    return out
+
+
+def _aggregate_stats(
     spark: SparkSession,
-    path: str,
-    df: DataFrame,
-    key,
+    full: str,
+    schema: StructType,
+    keys: list[str],
+    cols: list[str],
     bloom: dict | None = None,
-    stat_cols: list[str] | None = None,
-) -> dict:
-    """Stage one immutable data subdir and return {relpath: stats}
-    with per-file [min, max] ranges FOR EVERY KEY COLUMN plus row
-    counts — one `input_file_name()` aggregate over what was just
-    written (the manifest pass every table format runs at write
-    time). The subdir is INVISIBLE until a commit names it.
-
-    With ``bloom`` (the table's {"m": bits, "k": hashes} config,
-    r11 §20.2) the SAME aggregate also collects each file's set of
-    bloom bit positions — bounded by m per file regardless of row
-    count (collect_set of pmod values), so the driver-side packing is
-    O(m), never O(rows) — and writes one `<file>.bloom` bitset
-    sidecar per data file (the Iceberg-puffin shape: the JSON
-    manifest stays metadata-sized, membership bits live beside the
-    data). The stats row records "bloom": true so the probe knows
-    which files can be membership-tested.
-
-    ``stat_cols`` (r11 §20.3) records per-file [min, max] for EXTRA
-    columns under a "cols" key — the generalized data-skipping stats
-    a z-order compaction needs so predicates on EITHER clustered
-    dimension prune files (Delta collects the same for its first N
-    columns)."""
-    keys = _key_cols(key)
-    sub = f"d-{uuid.uuid4().hex[:12]}"
-    full = os.path.join(path, sub)
-    df.write.parquet(full)
+) -> list:
+    """The same per-file ``(name, rows, lo, hi)`` as `_footer_stats`
+    from one `input_file_name()` aggregate over the written files,
+    plus, with ``bloom`` (the table's {"m": bits, "k": hashes}
+    config), each file's set of bloom bit positions as a fifth item —
+    bounded by m per file regardless of row count (collect_set of
+    pmod values), so the driver-side packing is O(m), never O(rows).
+    Bit positions need the data, so a bloom table always takes this
+    path."""
     aggs = []
-    for i, k in enumerate(keys):
-        aggs += [F.min(k).alias(f"lo_{i}"), F.max(k).alias(f"hi_{i}")]
-    for j, c in enumerate(stat_cols or []):
-        aggs += [F.min(c).alias(f"xlo_{j}"), F.max(c).alias(f"xhi_{j}")]
+    for i, c in enumerate(cols):
+        aggs += [F.min(c).alias(f"lo_{i}"), F.max(c).alias(f"hi_{i}")]
     aggs.append(F.count(F.lit(1)).alias("rows"))
     if bloom:
         kc = _bloom_key_expr(keys)
@@ -365,34 +432,80 @@ def _write_data_files(
                     )
                 ).alias(f"bp_{s}")
             )
-    # read back with the schema just written: skips the footer-inference
-    # job a bare spark.read.parquet runs on every commit
-    stats = (
-        spark.read.schema(df.schema)
+    rows = (
+        spark.read.schema(schema)
         .parquet(full)
         .groupBy(F.input_file_name().alias("f"))
         .agg(*aggs)
         .collect()
     )
+    out = []
+    for r in rows:
+        item = (
+            os.path.basename(r["f"]),
+            r["rows"],
+            [r[f"lo_{i}"] for i in range(len(cols))],
+            [r[f"hi_{i}"] for i in range(len(cols))],
+        )
+        if bloom:
+            item += ({p for s in range(bloom["k"]) for p in r[f"bp_{s}"]},)
+        out.append(item)
+    return out
+
+
+def _write_data_files(
+    spark: SparkSession,
+    path: str,
+    df: DataFrame,
+    key,
+    bloom: dict | None = None,
+    stat_cols: list[str] | None = None,
+) -> dict:
+    """Stage one immutable data subdir and return {relpath: stats}
+    with per-file [min, max] ranges FOR EVERY KEY COLUMN plus row
+    counts (the manifest every table format records at write time).
+    The stats come from the parquet footers just written
+    (`_footer_stats`), so a commit launches no job beyond the write;
+    the `_aggregate_stats` read-back runs only for a bloom table or
+    when a footer lacks min/max. 0-row files get no manifest entry.
+    The subdir is INVISIBLE until a commit names it.
+
+    With ``bloom`` (r11 §20.2) one `<file>.bloom` bitset sidecar is
+    written per data file (the Iceberg-puffin shape: the JSON manifest
+    stays metadata-sized, membership bits live beside the data). The
+    stats row records "bloom": true so the probe knows which files can
+    be membership-tested.
+
+    ``stat_cols`` (r11 §20.3) records per-file [min, max] for EXTRA
+    columns under a "cols" key — the generalized data-skipping stats
+    a z-order compaction needs so predicates on EITHER clustered
+    dimension prune files (Delta collects the same for its first N
+    columns)."""
+    keys = _key_cols(key)
+    cols = keys + list(stat_cols or [])
+    sub = f"d-{uuid.uuid4().hex[:12]}"
+    full = os.path.join(path, sub)
+    df.write.parquet(full)
+    stats = None if bloom else _footer_stats(full, cols)
+    if stats is None:
+        stats = _aggregate_stats(spark, full, df.schema, keys, cols, bloom)
+    nk = len(keys)
     out = {}
-    for r in stats:
-        rel = os.path.join(sub, os.path.basename(r["f"]))
+    for name, rows, lo, hi, *bits in stats:
+        rel = os.path.join(sub, name)
         out[rel] = {
-            "lo": [_json_stat(r[f"lo_{i}"]) for i in range(len(keys))],
-            "hi": [_json_stat(r[f"hi_{i}"]) for i in range(len(keys))],
-            "rows": r["rows"],
+            "lo": [_json_stat(x) for x in lo[:nk]],
+            "hi": [_json_stat(x) for x in hi[:nk]],
+            "rows": rows,
         }
         if stat_cols:
             out[rel]["cols"] = {
-                c: [_json_stat(r[f"xlo_{j}"]), _json_stat(r[f"xhi_{j}"])]
+                c: [_json_stat(lo[nk + j]), _json_stat(hi[nk + j])]
                 for j, c in enumerate(stat_cols)
             }
-        if bloom:
-            positions: set = set()
-            for s in range(bloom["k"]):
-                positions.update(r[f"bp_{s}"])
+        if bits:
             with open(os.path.join(path, rel + ".bloom"), "wb") as fh:
-                fh.write(_pack_bits(positions, bloom["m"]))
+                fh.write(_pack_bits(bits[0], bloom["m"]))
             out[rel]["bloom"] = True
     return out
 
@@ -439,6 +552,7 @@ def create_table(
     O(true touched files). ~10 bits/key at the planner's file target
     is the classic 1% FP point — a false positive only costs one
     needless file read, never a wrong result."""
+    t0 = time.monotonic()
     keys = _key_cols(key)
     key_types = _validated_key_types(df, keys)
     if partition_by is not None and (not keys or keys[0] != partition_by):
@@ -468,6 +582,7 @@ def create_table(
             "schema": df.schema.json(),
             "bloom": bloom,
             "added": added,
+            "metrics": _metrics(path, added, [], t0, 1),
         },
     )
     return 0
@@ -512,21 +627,17 @@ def _write_partitioned(
     return added
 
 
-def _current_schema(path: str, version: int | None = None) -> tuple[StructType, bool]:
-    """The table schema AS OF ``version`` (default latest) and whether
-    it ever EVOLVED on the way there: the last commit ≤ version that
-    recorded a "schema" wins (commit 0 always records one; an
-    evolving merge records the widened one — r11 schema evolution).
-    Metadata-sized log replay, same cost as snapshot resolution."""
+def _current_schema(path: str, version: int | None = None) -> StructType:
+    """The table schema AS OF ``version`` (default latest): the last
+    commit ≤ version that recorded a "schema" wins (commit 0 always
+    records one; an evolving merge records the widened one — r11
+    schema evolution). Metadata-sized log replay, same cost as
+    snapshot resolution."""
     v = latest_version(path) if version is None else version
-    schema_json, evolved = None, False
+    schema_json = None
     for i in range(v + 1):
-        c = _read_commit(path, i)
-        if c.get("schema"):
-            if schema_json is not None:
-                evolved = True
-            schema_json = c["schema"]
-    return StructType.fromJson(json.loads(schema_json)), evolved
+        schema_json = _read_commit(path, i).get("schema") or schema_json
+    return StructType.fromJson(json.loads(schema_json))
 
 
 def read_snapshot(
@@ -540,39 +651,26 @@ def read_snapshot(
     error (ADVICE r10: previously FileNotFoundError, which made an
     emptied table permanently unreadable and un-insertable).
 
-    Schema evolution (r11): the schema AS OF the requested version is
-    the last one any commit ≤ version recorded; when the history
-    evolved, files written before the widening lack the new columns,
-    so the scan reads with ``mergeSchema`` and backfills any column a
-    file predates as NULL — the same read contract Delta/Iceberg give
-    an evolved table. Un-evolved tables keep the single-footer fast
-    path (no mergeSchema cost).
+    The scan is pinned to the schema AS OF the requested version (the
+    last one any commit ≤ version recorded, `_scan`): no footer is
+    read before an action, the columns come back in the recorded
+    order, and files written before a schema evolution read the new
+    columns as NULL — the same read contract Delta/Iceberg give an
+    evolved table.
 
     Deletion vectors (r11 §20.2): rows MOR-deleted as of the
     requested version are filtered by one position anti-join
     (`_apply_dv`); a DV-free table skips the join entirely."""
     live = snapshot_files(path, version)
-    schema, evolved = _current_schema(path, version)
-    cols = [f.name for f in schema.fields]
+    schema = _current_schema(path, version)
     if not live:
         return spark.createDataFrame([], schema)
-    paths = [os.path.join(path, rel) for rel in live]
     dvm = snapshot_dv(path, version)
-    dv_dirs = {d for dirs in dvm.values() for d in dirs}
-    if not evolved:
-        return _apply_dv(spark, path, spark.read.parquet(*paths), dv_dirs)
-    df = _apply_dv(
+    return _apply_dv(
         spark,
         path,
-        spark.read.option("mergeSchema", "true").parquet(*paths),
-        dv_dirs,
-    )
-    return df.select(
-        *[
-            F.col(c) if c in df.columns
-            else F.lit(None).cast(schema[c].dataType).alias(c)
-            for c in cols
-        ]
+        _scan(spark, path, live, schema),
+        {d for dirs in dvm.values() for d in dirs},
     )
 
 
@@ -602,7 +700,7 @@ def read_keys(
     meta = table_meta(path)
     keys = meta["key"]
     live = snapshot_files(path, version)
-    schema, _ = _current_schema(path, version)
+    schema = _current_schema(path, version)
     if not live:
         return spark.createDataFrame([], schema)
     touched = _touched_files(
@@ -614,18 +712,8 @@ def read_keys(
     scan = _apply_dv(
         spark,
         path,
-        spark.read.option("mergeSchema", "true").parquet(
-            *[os.path.join(path, rel) for rel in touched]
-        ),
+        _scan(spark, path, touched, schema),
         {d for rel in touched for d in dvm.get(rel, [])},
-    )
-    cols = [f.name for f in schema.fields]
-    scan = scan.select(
-        *[
-            F.col(c) if c in scan.columns
-            else F.lit(None).cast(schema[c].dataType).alias(c)
-            for c in cols
-        ]
     )
     return scan.join(
         F.broadcast(keys_df.select(*keys).distinct()), keys, "leftsemi"
@@ -651,7 +739,7 @@ def read_where_range(
     file-level skipping a parquet row-group statistic cannot do
     (listing and footer I/O already happened by then)."""
     live = snapshot_files(path, version)
-    schema, _ = _current_schema(path, version)
+    schema = _current_schema(path, version)
     if not live:
         return spark.createDataFrame([], schema)
     jlo, jhi = _json_stat(lo), _json_stat(hi)
@@ -666,18 +754,8 @@ def read_where_range(
     scan = _apply_dv(
         spark,
         path,
-        spark.read.option("mergeSchema", "true").parquet(
-            *[os.path.join(path, rel) for rel in keep]
-        ),
+        _scan(spark, path, keep, schema),
         {d for rel in keep for d in dvm.get(rel, [])},
-    )
-    cols = [f.name for f in schema.fields]
-    scan = scan.select(
-        *[
-            F.col(c) if c in scan.columns
-            else F.lit(None).cast(schema[c].dataType).alias(c)
-            for c in cols
-        ]
     )
     return scan.filter((F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi)))
 
@@ -725,7 +803,7 @@ def read_changes(
         op = c.get("op")
         if op in ("vacuum", "compact"):
             continue  # layout/retention commits: zero logical changes
-        schema, _ = _current_schema(path, v)
+        schema = _current_schema(path, v)
         cols = [f.name for f in schema.fields]
         payload = [x for x in cols if x not in keys]
         added = sorted(c.get("added", {}))
@@ -749,15 +827,12 @@ def read_changes(
             # data files against that one DV dir — O(commit), like
             # every other feed branch
             dvinfo = c["dv"]
-            scan = spark.read.option("mergeSchema", "true").parquet(
-                *[os.path.join(path, r) for r in dvinfo["files"]]
-            )
-            tagged = scan.select(
+            tagged = _scan(spark, path, dvinfo["files"], schema).select(
                 "*",
                 _rel_expr().alias("_dv_rel"),
                 F.col("_metadata.row_index").alias("_dv_pos"),
             )
-            pos = spark.read.parquet(
+            pos = spark.read.schema(_DV_SCHEMA).parquet(
                 os.path.join(path, dvinfo["dir"])
             ).select(
                 F.col("rel").alias("_dv_rel"),
@@ -765,31 +840,14 @@ def read_changes(
             )
             dead = tagged.join(pos, ["_dv_rel", "_dv_pos"], "leftsemi")
             frames.append(
-                dead.select(
-                    *[
-                        F.col(x) if x in scan.columns
-                        else F.lit(None).cast(schema[x].dataType).alias(x)
-                        for x in cols
-                    ],
-                    F.lit("delete").alias("_change_type"),
-                    ver,
-                )
+                dead.select(*cols, F.lit("delete").alias("_change_type"), ver)
             )
             continue
 
         def _read(rels: list[str]) -> DataFrame:
             if not rels:
                 return spark.createDataFrame([], schema)
-            df = spark.read.option("mergeSchema", "true").parquet(
-                *[os.path.join(path, rel) for rel in rels]
-            )
-            return df.select(
-                *[
-                    F.col(x) if x in df.columns
-                    else F.lit(None).cast(schema[x].dataType).alias(x)
-                    for x in cols
-                ]
-            )
+            return _scan(spark, path, rels, schema)
 
         ver = F.lit(v).cast("long").alias("_commit_version")
         post = _read(added)
@@ -871,7 +929,7 @@ def read_changes(
                 ver,
             ).select(*cols, "_change_type", "_commit_version")
         )
-    schema, _ = _current_schema(path, last)
+    schema = _current_schema(path, last)
     if not frames:
         empty = spark.createDataFrame([], schema)
         return empty.select(
@@ -1034,12 +1092,14 @@ def merge_into(
 
     Schema evolution (r11): with ``evolve_schema=True`` a change set
     carrying payload columns the table lacks WIDENS the table — the
-    base files this merge reads get the new columns backfilled as
-    NULL before the resolve, and the commit records the widened
-    schema, which `read_snapshot` / `read_changes` honor per version.
-    Untouched files are still carried verbatim (old footers; the
-    evolved read path backfills them at scan time — rewriting 100 TB
-    to add a column is exactly what evolution exists to avoid).
+    base files this merge reads are scanned with the widened schema,
+    so the new columns read as NULL before the resolve, and the
+    commit records the widened schema, which `read_snapshot` /
+    `read_changes` honor per version. Untouched files are still
+    carried verbatim (old footers; the pinned scan reads their new
+    columns as NULL — rewriting 100 TB to add a column is exactly
+    what evolution exists to avoid). Rewritten files are stored in
+    the table's column order, so every footer agrees with the log.
     Without the flag an extra column is a loud error, never a silent
     drop. An evolving change set must still carry every EXISTING
     payload column — evolution adds columns, it does not make the
@@ -1049,10 +1109,11 @@ def merge_into(
         if attempt_log is not None:
             attempt_log.append((event, v))
 
+    t0 = time.monotonic()
     meta = table_meta(path)
     keys = _key_cols(key) if key is not None else meta["key"]
     key_types = meta["key_types"]
-    schema, _ = _current_schema(path)
+    schema = _current_schema(path)
     table_cols = [f.name for f in schema.fields]
     by_name = {f.name: f for f in changes.schema.fields}
     new_cols = [
@@ -1068,6 +1129,8 @@ def merge_into(
         schema = StructType(
             list(schema.fields) + [by_name[c] for c in new_cols]
         )
+        table_cols += new_cols
+    attempts = 0
     for _ in range(max_retries + 1):
         v = latest_version(path)
         live = snapshot_files(path, v)
@@ -1083,29 +1146,20 @@ def merge_into(
             base = _apply_dv(
                 spark,
                 path,
-                spark.read.option("mergeSchema", "true").parquet(
-                    *[os.path.join(path, rel) for rel in touched]
-                ),
+                _scan(spark, path, touched, schema),
                 {d for rel in touched for d in dvm.get(rel, [])},
             )
         else:
             # pure insert outside every range: merge against an empty
             # base with the table's (possibly just-widened) schema
             base = spark.createDataFrame([], schema)
-        # backfill any column the read files predate (new this merge,
-        # or evolved by an earlier one) as typed NULL
-        base = base.select(
-            *[
-                F.col(f.name) if f.name in base.columns
-                else F.lit(None).cast(f.dataType).alias(f.name)
-                for f in schema.fields
-            ]
-        )
         merged = merge_apply(base, changes, key=keys, op_col=op_col)
         staged = _write_data_files(
             spark,
             path,
-            merged.repartitionByRange(max(len(touched), 1), *keys),
+            merged.select(*table_cols).repartitionByRange(
+                max(len(touched), 1), *keys
+            ),
             keys,
             meta.get("bloom"),
         )
@@ -1116,6 +1170,7 @@ def merge_into(
         # so progress is system-wide; the cap only bounds how long ONE
         # writer chases a commit storm before re-planning afresh
         for _skip in range(16):
+            attempts += 1
             try:
                 _try_commit(
                     path,
@@ -1127,6 +1182,9 @@ def merge_into(
                         # an evolving merge records the widened schema;
                         # _current_schema replays the latest one
                         **({"schema": schema.json()} if new_cols else {}),
+                        "metrics": _metrics(
+                            path, staged, touched, t0, attempts
+                        ),
                     },
                 )
                 _log("committed", target)
@@ -1203,8 +1261,9 @@ def append_table(
     epoch cannot both land it."""
     if (txn_app is None) != (txn_version is None):
         raise ValueError("txn_app and txn_version must be set together")
+    t0 = time.monotonic()
     meta = table_meta(path)
-    schema, _ = _current_schema(path)
+    schema = _current_schema(path)
     want = [f.name for f in schema.fields]
     if sorted(df.columns) != sorted(want):
         raise ValueError(
@@ -1222,7 +1281,7 @@ def append_table(
     payload = {"op": "append", "added": staged}
     if txn_app is not None:
         payload["txn"] = {"app": txn_app, "version": int(txn_version)}
-    for _ in range(max_retries + 1):
+    for attempt in range(1, max_retries + 2):
         v = latest_version(path)
         if (
             txn_app is not None
@@ -1231,6 +1290,7 @@ def append_table(
             # a racing writer of the same epoch beat us to it
             _cleanup_staged(path, staged)
             return v
+        payload["metrics"] = _metrics(path, staged, [], t0, attempt)
         try:
             _try_commit(path, v + 1, payload)
             return v + 1
@@ -1275,9 +1335,10 @@ def delete_keys_mor(
     without a set difference. Returns the committed version, or the
     current version unchanged when no live row matches (no empty
     commit, idempotent re-delete)."""
+    t0 = time.monotonic()
     meta = table_meta(path)
     keys, key_types = meta["key"], meta["key_types"]
-    for _ in range(max_retries + 1):
+    for attempt in range(1, max_retries + 2):
         v = latest_version(path)
         live = snapshot_files(path, v)
         touched = _touched_files(
@@ -1286,13 +1347,10 @@ def delete_keys_mor(
         if not touched:
             return v
         dvm = snapshot_dv(path, v)
-        scan = spark.read.option("mergeSchema", "true").parquet(
-            *[os.path.join(path, rel) for rel in touched]
-        )
         base = _apply_dv(
             spark,
             path,
-            scan,
+            _scan(spark, path, touched, _current_schema(path, v)),
             {d for r in touched for d in dvm.get(r, [])},
             keep_tags=True,
         ).select(
@@ -1306,7 +1364,8 @@ def delete_keys_mor(
         sub = f"dv-{uuid.uuid4().hex[:12]}"
         hits.write.parquet(os.path.join(path, sub))
         per_file = (
-            spark.read.parquet(os.path.join(path, sub))
+            spark.read.schema(_DV_SCHEMA)
+            .parquet(os.path.join(path, sub))
             .groupBy("rel")
             .agg(F.count(F.lit(1)).alias("n"))
             .collect()
@@ -1327,6 +1386,7 @@ def delete_keys_mor(
                         "files": sorted(r["rel"] for r in per_file),
                         "rows": int(sum(r["n"] for r in per_file)),
                     },
+                    "metrics": _metrics(path, {}, [], t0, attempt),
                 },
             )
             return v + 1
@@ -1403,18 +1463,19 @@ def compact_table(
     bloom sidecars (still written for bloom-enabled tables) keep
     key-membership pruning exact regardless of layout, which is why
     the two features compose. Unpartitioned tables only."""
+    t0 = time.monotonic()
     meta = table_meta(path)
     keys, partition_by = meta["key"], meta["partition_by"]
     if zorder_by is not None and partition_by is not None:
         raise ValueError("zorder_by is for unpartitioned tables")
-    for _ in range(max_retries + 1):
+    for attempt in range(1, max_retries + 2):
         v = latest_version(path)
         live = snapshot_files(path, v)
         if not live:
             return v  # nothing to compact; no empty commit
-        # read_snapshot (not a bare parquet read) so an EVOLVED table's
-        # pre-widening files get their new columns backfilled — the
-        # compaction rewrite then homogenizes the footers as a bonus
+        # read_snapshot so pending deletion vectors are applied and an
+        # EVOLVED table's pre-widening files read their new columns as
+        # NULL — the rewrite then homogenizes the footers as a bonus
         df = read_snapshot(spark, path, v)
         if zorder_by is not None:
             c1, c2 = zorder_by
@@ -1440,7 +1501,12 @@ def compact_table(
             _try_commit(
                 path,
                 v + 1,
-                {"op": "compact", "added": added, "removed": sorted(live)},
+                {
+                    "op": "compact",
+                    "added": added,
+                    "removed": sorted(live),
+                    "metrics": _metrics(path, added, live, t0, attempt),
+                },
             )
             return v + 1
         except CommitConflict:
@@ -1467,14 +1533,21 @@ def vacuum_table(
     + unlink work; needs no SparkSession."""
     if retain_last < 1:
         raise ValueError("retain_last must be >= 1")
-    for _ in range(max_retries + 1):
+    t0 = time.monotonic()
+    for attempt in range(1, max_retries + 2):
         latest = latest_version(path)
         horizon = max(0, latest - retain_last + 1, vacuum_horizon(path))
         try:
             _try_commit(
                 path,
                 latest + 1,
-                {"op": "vacuum", "horizon": horizon, "added": {}, "removed": []},
+                {
+                    "op": "vacuum",
+                    "horizon": horizon,
+                    "added": {},
+                    "removed": [],
+                    "metrics": _metrics(path, {}, [], t0, attempt),
+                },
             )
             break
         except CommitConflict:
@@ -1509,18 +1582,18 @@ def vacuum_table(
         shutil.rmtree(os.path.join(path, d), ignore_errors=True)
     deleted = sorted(all_ever - needed)
     for rel in deleted:
-        try:
-            os.remove(os.path.join(path, rel))
-        except FileNotFoundError:
-            pass  # a prior interrupted vacuum already got it
-        try:
-            os.remove(os.path.join(path, rel + ".bloom"))
-        except FileNotFoundError:
-            pass  # table has no bloom sidecars (or already swept)
-    for rel in deleted:  # drop now-empty staging subdirs
-        sub = os.path.join(path, rel.split(os.sep, 1)[0])
-        if os.path.isdir(sub) and not os.listdir(sub):
-            os.rmdir(sub)
+        sub, name = os.path.split(rel)
+        # the data file, its bloom sidecar and the writer's checksum
+        for f in (name, name + ".bloom", f".{name}.crc"):
+            try:
+                os.remove(os.path.join(path, sub, f))
+            except FileNotFoundError:
+                pass  # no such sidecar, or a prior vacuum got it
+    # a subdir no retained version needs goes whole, with its
+    # _SUCCESS markers (and any 0-row file the manifest never named)
+    needed_subs = {rel.split(os.sep, 1)[0] for rel in needed}
+    for sub in {rel.split(os.sep, 1)[0] for rel in deleted} - needed_subs:
+        shutil.rmtree(os.path.join(path, sub), ignore_errors=True)
     return {
         "version": marker_v,
         "horizon": horizon,
@@ -1739,7 +1812,7 @@ def lakehouse_vacuum_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
             for f in os.listdir(os.path.join(path, sub)):
                 if f.endswith(".parquet"):
                     survivors.append(os.path.join(path, sub, f))
-    return spark.read.parquet(*survivors).select(
+    return spark.read.schema(_current_schema(path)).parquet(*survivors).select(
         "n_nationkey", "n_name", "n_regionkey"
     )
 

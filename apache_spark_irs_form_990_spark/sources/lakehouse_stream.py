@@ -104,7 +104,7 @@ class CommitLogStreamSource(DataSource):
         return "commitlog_tail"
 
     def schema(self) -> StructType:
-        schema, _ = _current_schema(self.options["path"])
+        schema = _current_schema(self.options["path"])
         return StructType(
             list(schema.fields) + [StructField(VERSION_COL, LongType(), False)]
         )

@@ -1517,3 +1517,206 @@ def test_streaming_foreachbatch_append_sink_exactly_once(spark, tmp_path):
         txn_version=1,
     )
     assert _rows(read_snapshot(spark, path)) == want
+
+
+# ------------------------------------------------------------------------
+# Commit stats from the written footers, reads pinned to the logged
+# schema, per-commit metrics, vacuum sidecars, and a job-count guard.
+
+import datetime  # noqa: E402
+import uuid  # noqa: E402
+
+import pyarrow.parquet as pq  # noqa: E402
+
+from apache_spark_irs_form_990_spark.sources.lakehouse import (  # noqa: E402
+    _aggregate_stats,
+    _footer_stats,
+    _read_commit,
+    append_table,
+    delete_keys_mor,
+    read_changes,
+    snapshot_dv,
+)
+
+_GEN = {
+    "bigint": lambda i: (i * 7919) % 1000 - 500,
+    "int": lambda i: (i * 31) % 97,
+    # mixed-case and non-ASCII: the footer's byte order must agree
+    # with Spark's string min/max
+    "string": lambda i: ["a", "Z", "é", "zz", "ü"][i % 5] + f"{i * 37 % 1000:03d}",
+    "date": lambda i: datetime.date(2020, 1, 1)
+    + datetime.timedelta(days=(i * 13) % 400),
+}
+
+
+@pytest.mark.parametrize(
+    "ddl, key, stat_cols",
+    [
+        ("k bigint, v string", ["k"], []),
+        ("k string, v bigint", ["k"], []),
+        ("k date, v string", ["k"], []),
+        ("a int, b string, v bigint", ["a", "b"], []),
+        ("k bigint, x int, d date", ["k"], ["x", "d"]),
+    ],
+    ids=["bigint", "string", "date", "composite", "zorder_stat_cols"],
+)
+def test_footer_stats_equal_aggregate_stats(spark, tmp_path, ddl, key, stat_cols):
+    """The per-file stats a write takes from its parquet footers equal
+    the ones the `input_file_name()` aggregate computes over the same
+    files: rows, each key column's [lo, hi] and the z-order "cols"."""
+    types = [c.split(" ")[1] for c in ddl.split(", ")]
+    df = spark.createDataFrame(
+        [tuple(_GEN[t](i) for t in types) for i in range(300)], ddl
+    ).repartition(3)
+    path = str(tmp_path / "t")
+    added = _write_data_files(spark, path, df, key, stat_cols=stat_cols)
+    sub = next(iter(added)).split(os.sep)[0]
+    full = os.path.join(path, sub)
+    footer = _footer_stats(full, key + stat_cols)
+    assert footer is not None, "Spark's footers carry min/max for these types"
+    agg = _aggregate_stats(spark, full, df.schema, key, key + stat_cols)
+    assert sorted(footer) == sorted(agg)
+    assert sum(s["rows"] for s in added.values()) == 300
+    if stat_cols:
+        assert all(set(s["cols"]) == set(stat_cols) for s in added.values())
+
+
+def test_footer_without_min_max_falls_back_to_aggregate(spark, tmp_path):
+    """An all-NULL column chunk has no min/max in its footer: the
+    write then takes its stats from the aggregate, NULL range and all."""
+    df = spark.createDataFrame(
+        [(i, None) for i in range(10)], "k bigint, x int"
+    ).coalesce(1)
+    path = str(tmp_path / "t")
+    added = _write_data_files(spark, path, df, "k", stat_cols=["x"])
+    (rel, s), = added.items()
+    assert _footer_stats(os.path.join(path, rel.split(os.sep)[0]), ["k", "x"]) is None
+    assert s["lo"] == [0] and s["hi"] == [9] and s["rows"] == 10
+    assert s["cols"] == {"x": [None, None]}
+
+
+def test_read_snapshot_keeps_logged_column_order_after_merge(spark, tmp_path):
+    """A table whose key is not its first column keeps the logged
+    column order through a merge: `merge_apply` emits keys first, the
+    merge stores its files in table order, and the pinned read returns
+    the recorded order whichever file a footer would be taken from."""
+    path = str(tmp_path / "t")
+    want = ["name", "amount", "id"]
+    base = spark.createDataFrame(
+        [(f"n{i}", i * 10, i) for i in range(8)], "name string, amount long, id long"
+    )
+    create_table(spark, path, base, key="id", n_files=2)
+    # touches both files, so only merge-written files stay live
+    merge_into(
+        spark,
+        path,
+        spark.createDataFrame(
+            [(1, "U", "x", 1), (6, "U", "y", 2)],
+            "id long, op string, name string, amount long",
+        ),
+    )
+    assert not set(snapshot_files(path)) & set(snapshot_files(path, 0))
+    assert read_snapshot(spark, path).columns == want
+    assert read_changes(spark, path).columns[:3] == want
+    for rel in snapshot_files(path):
+        assert pq.read_schema(os.path.join(path, rel)).names == want
+
+
+def test_vacuum_leaves_only_needed_files_and_dirs(spark, tmp_path):
+    """After create → merge → compact → MOR delete → vacuum, the table
+    directory holds the commit log, the live files' subdirs and the DV
+    dir still needed — no expired checksum or _SUCCESS marker keeps an
+    expired subdir alive."""
+    path = _dv_table(spark, tmp_path)
+    merge_into(
+        spark,
+        path,
+        spark.createDataFrame(
+            [(6, "U", "PATCHED", 9)],
+            "n_nationkey int, op string, n_name string, n_regionkey long",
+        ),
+    )
+    compact_table(spark, path, n_files=1)
+    delete_keys_mor(spark, path, _keys_df(spark, [3]))
+    vacuum_table(path, retain_last=1)
+    live = snapshot_files(path)
+    live_subs = {rel.split(os.sep)[0] for rel in live}
+    dv_dirs = {d for dirs in snapshot_dv(path).values() for d in dirs}
+    assert dv_dirs
+    assert set(os.listdir(path)) == {"_commits"} | live_subs | dv_dirs
+    for sub in live_subs:
+        names = {rel.split(os.sep)[1] for rel in live if rel.startswith(sub)}
+        allowed = names | {f".{n}.crc" for n in names} | {"_SUCCESS", "._SUCCESS.crc"}
+        assert set(os.listdir(os.path.join(path, sub))) <= allowed
+
+
+def test_commit_metrics_record_what_each_commit_did(spark, tmp_path):
+    """Every commit carries its own metrics, consistent with its
+    manifest entries and the files on disk; on a DV-free table the
+    rows the live files' manifests record equal the snapshot's."""
+    path = str(tmp_path / "t")
+    create_table(spark, path, _nation(spark), key="n_nationkey", n_files=2)
+    append_table(
+        spark,
+        path,
+        spark.createDataFrame(
+            [(100 + i, f"X{i}", 1) for i in range(5)],
+            "n_nationkey int, n_name string, n_regionkey long",
+        ),
+    )
+    n = read_snapshot(spark, path).count()
+    assert sum(_read_commit(path, v)["metrics"]["rows_added"] for v in (0, 1)) == n
+    merge_into(
+        spark,
+        path,
+        spark.createDataFrame(
+            [(3, "U", "P", 9), (4, "D", None, None)],
+            "n_nationkey int, op string, n_name string, n_regionkey long",
+        ),
+    )
+    compact_table(spark, path, n_files=1)
+    for v in range(latest_version(path) + 1):
+        c = _read_commit(path, v)
+        m = c["metrics"]
+        assert m["files_added"] == len(c["added"])
+        assert m["files_removed"] == len(c.get("removed", []))
+        assert m["rows_added"] == sum(s["rows"] for s in c["added"].values())
+        assert m["bytes_added"] == sum(
+            os.path.getsize(os.path.join(path, rel)) for rel in c["added"]
+        )
+        assert m["attempts"] == 1 and m["duration_s"] >= 0
+    live = snapshot_files(path)
+    assert sum(s["rows"] for s in live.values()) == read_snapshot(spark, path).count()
+
+
+def _jobs_launched(spark, fn) -> int:
+    """Spark jobs ``fn`` launches, counted under a job group of its own
+    once the listener bus has delivered every job event."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_commit_and_read_job_counts(spark, tmp_path):
+    """A commit launches no job to re-read what it wrote, and no read
+    of the table infers a schema: reads launch 0 jobs before an
+    action, create ≤ 3 (range sample, shuffle, write), append ≤ 2."""
+    path = str(tmp_path / "t")
+    assert _jobs_launched(
+        spark,
+        lambda: create_table(spark, path, _nation(spark), key="n_nationkey", n_files=4),
+    ) <= 3
+    extra = spark.createDataFrame(
+        [(100, "X", 1)], "n_nationkey int, n_name string, n_regionkey long"
+    )
+    assert _jobs_launched(spark, lambda: append_table(spark, path, extra)) <= 2
+    delete_keys_mor(spark, path, _keys_df(spark, [5]))
+    assert _jobs_launched(spark, lambda: read_snapshot(spark, path)) == 0
+    assert _jobs_launched(spark, lambda: read_changes(spark, path)) == 0
