@@ -170,6 +170,26 @@ SHOWCASE = {
         "checkpointed survivors only, counts assembled from 1-row "
         "aggregates — no corpus re-scan per stage."
     ),
+    "dedup_substring_coverage": (
+        "Exact-substring duplication coverage (r6, Lee et al. 2107.06499): "
+        "overlapping 20-token gram md5s minted map-side -> ONE "
+        "count-over-window on the gram digest ('occurs elsewhere') -> "
+        "per-doc interval-union sweep (running-max break flag + island "
+        "sum) -> left join against per-doc sizes. The plan's only join is "
+        "the final broadcast left join; there is no pair join anywhere, so "
+        "cost is linear in corpus tokens."
+    ),
+    "dedup_semantic_ivf_cells": (
+        "SemDeDup IVF-cell semantic dedup (r6, 2303.09540; r12 Arrow "
+        "kernels): the Arrow argmax kernel assigns each vector its cell "
+        "(no codebook crossjoin, no per-vector window), one window ranks "
+        "each cell by priority, and the ranked frame is checkpointed. ONE "
+        "MapInPandas pass then compares each vector with the top-64 "
+        "priority members of its cell, held in the task closure as a "
+        "bounded K x 64 index - |corpus| x C work and no self-join. The "
+        "only exchanges left are the per-cell report aggregate and its "
+        "sort."
+    ),
 }
 
 

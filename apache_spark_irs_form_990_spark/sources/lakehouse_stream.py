@@ -1,46 +1,59 @@
 """Streaming TAIL of the commit-log table — the lakehouse as a
-Structured Streaming SOURCE (r11; the Delta streaming-source contract
-re-expressed through Spark 4's Python DataSource API).
+Structured Streaming SOURCE (the Delta streaming-source contract
+re-expressed on Spark's own file source).
 
 `sources/lakehouse.py` gives the engine a mutable, snapshot-isolated
-table; this module makes that table *tailable*: a streaming query
-whose offsets ARE commit versions. Each micro-batch reads exactly the
-files the commits in ``(start, end]`` added — never a snapshot scan —
-so a consumer (the persisted dedup state, a feature backfill, an
-index builder) pays O(new data) per trigger, the property that makes
-"keep the downstream state current" affordable at 100 TB.
+table; this module makes that table *tailable*. The commit log is a
+directory of immutable single-line JSON files, each fully written and
+then hard-linked into place (the ``.tmp-*`` staging names start with
+``.``, which the file source skips), so Spark's JSON file source
+tails it natively: the engine tracks which commit files it has seen,
+and Python runs only in the executors, to read the data files the new
+commits added. A consumer (the persisted dedup state, a feature
+backfill, an index builder) pays O(new data) per trigger, never a
+snapshot scan.
 
-Offset semantics (== Delta's streaming source, expressed in ~100
-lines):
+Semantics (== Delta's streaming source):
 
-  * offset = ``{"version": V}``; the batch for ``(start, end]`` is
-    every data file the commits in that half-open range ADDED.
-  * the CREATE commit replays as the initial insert flood (start the
-    reader at ``startingVersion`` to skip history).
+  * a batch is every data file ADDED by the commit files that arrived
+    since the last batch; each emitted row carries ``_commit_version``,
+    the commit that added it (provenance, and what the batch-twin
+    oracle pins).
+  * the CREATE commit replays as the initial insert flood; start the
+    reader at ``startingVersion`` to skip history.
   * COMPACT and VACUUM commits are layout/retention-only — zero
     logical changes, so the tail emits NOTHING for them (their added
     files are rewrites of rows already delivered; streaming them
     would duplicate).
-  * a commit that REMOVED files it did not rewrite losslessly (a
-    MERGE with updates/deletes) is NOT an append — the tail refuses
-    loudly by default (the source can't retract rows it already
-    emitted), or skips the commit wholesale under
+  * a commit that REMOVED files or wrote deletion vectors (a MERGE
+    with updates/deletes, a merge-on-read DELETE) is NOT an append —
+    the tail fails the query by default (the source can't retract
+    rows it already emitted), or skips the commit wholesale under
     ``skipChangeCommits`` (Delta's option of the same name; the CDF
     reader `lakehouse.read_changes` is the correct consumer for
     change commits).
-  * every emitted row carries ``_commit_version`` — consumers get
-    provenance and the batch-twin oracle can pin WHICH commit each
-    row came from.
+  * offsets are the file source's log of the commit files it has
+    seen, not commit versions, and ``numInputRows`` counts commit
+    files, not data rows. A checkpoint written by the earlier
+    Python-data-source tail (offsets ``{"version": V}``) cannot be
+    resumed; the table itself is unaffected.
+  * the file source's ``maxFileAge`` is set so that no commit ages
+    out: with Spark's default of 7 days, a restart would silently skip
+    a commit file whose mtime is more than 7 days older than the
+    newest file already seen.
 
-Exactly-once falls out of offset determinism: the same ``(start,
-end]`` range always names the same immutable files (the commit log
-never mutates), so a checkpoint replay re-reads identical data —
-pinned by the kill-and-restart test in tests/test_lakehouse_stream.py.
+Exactly-once: the checkpoint records exactly which commit files each
+batch consumed, and commit files and the data files they name never
+change, so a replay re-reads identical data — pinned by the
+kill-and-restart test in tests/test_lakehouse_stream.py. Rate limiting
+(the file source's ``maxFilesPerTrigger``) is now possible but not
+exposed; a backlog replays as one batch.
 
 Worker-side reads are Arrow RecordBatches straight from the parquet
-footers (never row-at-a-time tuples), with typed-NULL backfill for
-files written before a schema evolution — the same read contract as
-`lakehouse.read_snapshot`.
+files, cast to the schema the table had when the tail was built, with
+typed NULLs for columns a file predates — the same read contract as
+`lakehouse.read_snapshot`. The read function closes over plain values
+only, so an executor unpickles it without importing this package.
 
 Provenance: the reference's streaming surface is batch-replay
 (IRSSpark.py processes one manifest per run); a tailable commit log
@@ -50,151 +63,115 @@ is that contract made continuous. Cited for parity, not copied.
 from __future__ import annotations
 
 import hashlib
-import json
 import os
 import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceStreamReader,
-    InputPartition,
-)
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import LongType, StructField, StructType
 
 from apache_spark_irs_form_990_spark.registry import register
 from apache_spark_irs_form_990_spark.sources.lakehouse import (
     _TABLE_DIRS,
     _base_nation,
+    _commits_dir,
     _current_schema,
-    _read_commit,
     compact_table,
     create_table,
-    latest_version,
     merge_into,
 )
 from apache_spark_irs_form_990_spark.tables import load
 
 VERSION_COL = "_commit_version"
 
-
-class NonAppendCommit(RuntimeError):
-    """The tail hit a commit that updated/deleted already-emitted rows."""
-
-
-class CommitLogStreamSource(DataSource):
-    """``spark.readStream.format("commitlog_tail")`` over a commit-log
-    table. Options: ``path`` (table dir, required), ``startingVersion``
-    (first commit to emit, default 0 = replay the create),
-    ``skipChangeCommits`` ("true" to silently skip non-append commits
-    instead of failing the query).
-
-    NO rate-limit option (Delta's maxFilesPerTrigger): the Python
-    DataSource API's ``latestOffset()`` takes no start offset (no
-    admission control), so any reader-side pacing state can desync
-    from the engine's committed offset — a prototype paced with a
-    driver-side watermark DELIVERED DUPLICATES under the engine's
-    actual call order and was removed; a backlog replays as one batch
-    until the API grows admission control."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "commitlog_tail"
-
-    def schema(self) -> StructType:
-        schema = _current_schema(self.options["path"])
-        return StructType(
-            list(schema.fields) + [StructField(VERSION_COL, LongType(), False)]
-        )
-
-    def streamReader(self, schema: StructType) -> "CommitLogStreamReader":
-        return CommitLogStreamReader(self.options, schema)
+# only the commit fields the tail needs; ``added`` maps relpath → the
+# file's stats object, read back as its raw JSON text
+_COMMIT_SCHEMA = (
+    "version long, op string, added map<string,string>, "
+    "removed array<string>, dv string"
+)
 
 
-class CommitLogStreamReader(DataSourceStreamReader):
-    """Offsets are commit versions; a batch is the files its version
-    range added. The reader object is pickled to executors, so it
-    carries only strings/ints (path, schema JSON, flags)."""
+def _file_reader(path: str, schema: StructType):
+    """The ``mapInArrow`` function of the tail: ``(rel, version)``
+    rows in, each named parquet file out as Arrow RecordBatches cast
+    to ``schema`` (its last field is ``_commit_version``), with typed
+    NULLs for columns the file predates. It closes over a string and
+    an Arrow schema only, so a worker unpickles it without importing
+    this package."""
+    arrow_schema = to_arrow_schema(schema)
+    data_fields = list(arrow_schema)[:-1]
 
-    def __init__(self, options, schema: StructType) -> None:
-        self.path = options["path"]
-        self.start_version = int(options.get("startingVersion", 0))
-        self.skip_change_commits = (
-            str(options.get("skipChangeCommits", "false")).lower() == "true"
-        )
-        self.schema_json = schema.json()
-
-    def initialOffset(self) -> dict:
-        return {"version": self.start_version - 1}
-
-    def latestOffset(self) -> dict:
-        return {"version": latest_version(self.path)}
-
-    def partitions(self, start: dict, end: dict):
-        parts: list[InputPartition] = []
-        for v in range(start["version"] + 1, end["version"] + 1):
-            c = _read_commit(self.path, v)
-            op = c.get("op")
-            if op in ("compact", "vacuum"):
-                continue  # layout/retention: rows already delivered
-            if c.get("removed") or c.get("dv"):
-                if self.skip_change_commits:
-                    continue
-                raise NonAppendCommit(
-                    f"commit {v} of {self.path} removed files or wrote "
-                    "deletion vectors (a MERGE/DELETE with updates or "
-                    "deletes): a streaming tail cannot retract emitted "
-                    "rows. Read changes through lakehouse.read_changes, "
-                    "or set skipChangeCommits=true to skip such commits."
-                )
-            for rel in sorted(c.get("added", {})):
-                parts.append(
-                    InputPartition((os.path.join(self.path, rel), v))
-                )
-        return parts
-
-    def read(self, partition: InputPartition):
-        """One parquet file → Arrow RecordBatches aligned to the query
-        schema (typed-NULL backfill for pre-evolution files) plus the
-        constant ``_commit_version`` column. Runs in the executor;
-        Arrow end to end."""
+    def read(batches):
         import pyarrow as pa
         import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import to_arrow_schema
 
-        file_path, version = partition.value
-        schema = StructType.fromJson(json.loads(self.schema_json))
-        arrow_schema = to_arrow_schema(schema)
-        t = pq.read_table(file_path)
-        n = t.num_rows
-        cols = []
-        for field in arrow_schema:
-            if field.name == VERSION_COL:
-                cols.append(pa.array([version] * n, type=field.type))
-            elif field.name in t.column_names:
-                cols.append(t.column(field.name).cast(field.type))
-            else:
-                cols.append(pa.nulls(n, type=field.type))
-        yield from pa.Table.from_arrays(cols, schema=arrow_schema).to_batches()
+        for b in batches:
+            for rel, version in zip(
+                b.column("rel").to_pylist(), b.column("version").to_pylist()
+            ):
+                t = pq.read_table(os.path.join(path, rel))
+                n = t.num_rows
+                cols = [
+                    t.column(f.name).cast(f.type)
+                    if f.name in t.column_names
+                    else pa.nulls(n, type=f.type)
+                    for f in data_fields
+                ]
+                cols.append(pa.array([version] * n, type=pa.int64()))
+                yield from pa.Table.from_arrays(
+                    cols, schema=arrow_schema
+                ).to_batches()
 
-    def commit(self, end: dict) -> None:
-        pass  # offsets are durable in the checkpoint; nothing to ack
-
-
-def register_commitlog_tail(spark: SparkSession) -> None:
-    spark.dataSource.register(CommitLogStreamSource)
+    return read
 
 
 def tail_stream(spark: SparkSession, path: str, **options) -> DataFrame:
-    """``readStream`` over a commit-log table (registers the source
-    idempotently — re-registration replaces, never errors)."""
-    register_commitlog_tail(spark)
-    reader = spark.readStream.format("commitlog_tail").option("path", path)
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    return reader.load()
+    """``readStream`` over a commit-log table. Options:
+    ``startingVersion`` (first commit to emit, default 0 = replay the
+    create) and ``skipChangeCommits`` ("true" to skip non-append
+    commits instead of failing the query). The output schema is the
+    table schema as of this call plus ``_commit_version long``."""
+    start = int(options.get("startingVersion", 0))
+    skip = str(options.get("skipChangeCommits", "false")).lower() == "true"
+    schema = _current_schema(path)
+    out_schema = StructType(
+        list(schema.fields) + [StructField(VERSION_COL, LongType(), False)]
+    )
+    commits = (
+        spark.readStream.schema(_COMMIT_SCHEMA)
+        # no commit may age out: with the 7-day default, a restart
+        # skips any commit file 7 days older than the newest seen
+        .option("maxFileAge", "36500d")
+        .json(_commits_dir(path))
+    )
+    change = (F.size("removed") > 0) | F.col("dv").isNotNull()
+    refuse = F.raise_error(
+        F.format_string(
+            "NonAppendCommit: commit %d of %s removed files or wrote "
+            "deletion vectors (a MERGE/DELETE with updates or deletes): "
+            "a streaming tail cannot retract emitted rows. Read changes "
+            "through lakehouse.read_changes, or set "
+            "skipChangeCommits=true to skip such commits.",
+            F.col("version"),
+            F.lit(path),
+        )
+    )
+    keep = (
+        F.when(F.col("version") < start, False)
+        # layout/retention: rows already delivered
+        .when(F.col("op").isin("compact", "vacuum"), False)
+        .when(change, F.lit(False) if skip else refuse)
+        .otherwise(True)
+    )
+    files = commits.filter(keep).select(
+        F.explode(F.map_keys("added")).alias("rel"), "version"
+    )
+    return files.repartition(
+        spark.sparkContext.defaultParallelism
+    ).mapInArrow(_file_reader(path, out_schema), out_schema)
 
 
 @register(
